@@ -199,11 +199,17 @@ def test_driver_path_is_job_frugal(spark):
     """The fast path's reason to exist: jobs must NOT scale with
     n_merges. Count Spark jobs via the status tracker — histogram
     materialization + vocab collect + result createDataFrame leave a
-    small constant, far under the distributed path's ~2 per merge."""
-    tracker = spark.sparkContext.statusTracker()
+    small constant, far under the distributed path's ~2 per merge.
+    The jobs run in their own group: the status store keeps only the
+    last ``spark.ui.retainedJobs``, so a before/after count over all
+    jobs goes wrong once earlier tests have run that many."""
+    sc = spark.sparkContext
     texts = _random_texts(8)
     df = _corpus_df(spark, texts)
-    base = len(tracker.getJobIdsForGroup())
-    bpe_train(df, 50).collect()
-    ran = len(tracker.getJobIdsForGroup()) - base
+    sc.setJobGroup("bpe_train_job_budget", "bpe_train driver-path job budget")
+    try:
+        bpe_train(df, 50).collect()
+        ran = len(sc.statusTracker().getJobIdsForGroup("bpe_train_job_budget"))
+    finally:
+        sc.setJobGroup(None, None)
     assert 0 < ran <= 8, ran

@@ -238,8 +238,8 @@ def test_nan_inputs_excluded(spark):
 
 def test_retention_max_groups_refuses_high_cardinality(spark):
     """ADVICE r16: the per-(group, bucket) histogram is collected to
-    the driver, so a doc-id-grade group key must refuse loudly (the
-    kll max_groups_per_partition contract), never OOM silently."""
+    the driver, so a doc-id-grade group key must refuse loudly, never
+    OOM silently."""
     df = spark.createDataFrame(
         [(i, float(i % 10) / 10.0) for i in range(200)],
         "doc_id long, score double",

@@ -9,24 +9,19 @@ fixtures:
 - prefpairs: ties-never-pair / margin-positivity / per-prompt cap
   over arbitrary score multisets,
 - conversations.truncate_to_budget: the prefix property and budget
-  respect for arbitrary turn lists,
-- KLL core: n exact, min/max exact, quantile within value range
-  under arbitrary float streams and merge splits.
+  respect for arbitrary turn lists.
 
-Spark examples are capped low (each example is a Spark job); the
-KLL core property runs pure-numpy and affords many more.
+Spark examples are capped low (each example is a Spark job).
 """
 
 from __future__ import annotations
 
-import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from utc_cuip_kafka_aws_connector_spark.operators.intradedup import (
     dedup_paragraphs,
 )
-from utc_cuip_kafka_aws_connector_spark.operators.kll import _KLL
 from utc_cuip_kafka_aws_connector_spark.operators.prefpairs import (
     preference_pairs,
 )
@@ -135,28 +130,3 @@ def test_truncate_prefix_and_budget(spark, convs, budget):
             nxt = t[len(kept)][1]
             nxt_toks = len(nxt.split()) if nxt.strip() else 0
             assert used + nxt_toks > budget
-
-
-@settings(max_examples=60, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    data=st.lists(
-        st.floats(
-            allow_nan=False, allow_infinity=False, width=32,
-            min_value=-1e6, max_value=1e6,
-        ),
-        min_size=1,
-        max_size=400,
-    ),
-    cut=st.integers(0, 400),
-    q=st.floats(0.0, 1.0),
-)
-def test_kll_core_invariants(data, cut, q):
-    arr = np.asarray(data, dtype=np.float64)
-    a, b = arr[: cut % (len(arr) + 1)], arr[cut % (len(arr) + 1):]
-    s1, s2 = _KLL(32), _KLL(32)
-    s1.update(a)
-    s2.update(b)
-    s1.merge(s2)
-    assert s1.n == len(arr)
-    est = s1.quantile(q)
-    assert arr.min() <= est <= arr.max()  # estimates stay in range

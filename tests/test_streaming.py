@@ -174,19 +174,6 @@ def test_stateful_running_stats(spark, events_dir, tmp_path):
         assert abs(ftotal - total) < 1e-6
 
 
-def test_scheduler_pool_tags_jobs(spark):
-    """R21 parity: the priority helper must tag jobs with the pool name
-    (pool weights themselves come from the allocation file on a real
-    cluster)."""
-    from utc_cuip_kafka_aws_connector_spark.streaming.priority import scheduler_pool
-
-    sc = spark.sparkContext
-    with scheduler_pool(spark, "vision"):
-        assert sc.getLocalProperty("spark.scheduler.pool") == "vision"
-        assert spark.range(10).count() == 10  # a job actually runs in the pool
-    assert sc.getLocalProperty("spark.scheduler.pool") is None
-
-
 def test_kafka_shaped_stream_end_to_end(spark, tmp_path):
     """The full reference job behind the Kafka column contract, no
     broker: file_message_reader emits (topic, value) exactly like

@@ -20,9 +20,6 @@ from utc_cuip_kafka_aws_connector_spark.operators.layout import write_clustered
 from utc_cuip_kafka_aws_connector_spark.operators.tableread import (
     write_clustered_manifested,
 )
-from utc_cuip_kafka_aws_connector_spark.operators.ndcurve import (
-    write_ndclustered,
-)
 
 BOX = {"x": (10, 25), "y": (40, 70)}
 
@@ -95,8 +92,10 @@ def test_manifest_route_skips_the_footer_job(spark, data, tmp_path, monkeypatch)
 
 def test_pruning_reads_fewer_files_and_is_conservative(spark, data, tmp_path):
     path = str(tmp_path / "t")
-    write_ndclustered(data, path, ["x", "y"], bits=7, n_files=32,
-                      stats_manifest=True)
+    # the range shuffle makes one partition per core; cap rows per file
+    # so the 4,000-row fixture lands in ~32 clustered files
+    write_clustered_manifested(data, path, "x", "y", bits=7,
+                               maxRecordsPerFile=125)
     total = len(tableread.list_data_files(spark, path))
     assert total >= 16
     out = tableread.box_read(spark, path, BOX)

@@ -1,81 +1,7 @@
-from utc_cuip_kafka_aws_connector_spark.operators.asof import asof_join
-from utc_cuip_kafka_aws_connector_spark.operators.dedup import (
-    connected_components,
-    dedup_clusters,
-    exact_dedup,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash,
-    sketch_documents,
-)
-from utc_cuip_kafka_aws_connector_spark.operators.chunkdedup import chunk_dedup_ratio
-from utc_cuip_kafka_aws_connector_spark.operators.chunking import (
-    chunk_documents,
-    content_defined_chunks,
-)
-from utc_cuip_kafka_aws_connector_spark.operators.multimodal import (
-    attach_binary_payload,
-    decode_image,
-    decode_wav,
-    extract_audio_meta,
-    extract_byte_features,
-    extract_image_meta,
-    iter_video_frames,
-    sample_video_frames,
-)
-from utc_cuip_kafka_aws_connector_spark.operators.ranges import interval_join
-from utc_cuip_kafka_aws_connector_spark.operators.similarity import (
-    cosine_topk,
-    ivf_topk,
-    kmeans_centroids,
-    lsh_ann_pairs,
-    lsh_buckets,
-)
-from utc_cuip_kafka_aws_connector_spark.operators.semdedup import semantic_dedup
-from utc_cuip_kafka_aws_connector_spark.operators.tokenizer import (
-    bpe_encode_word,
-    bpe_token_count,
-)
-from utc_cuip_kafka_aws_connector_spark.operators.text import (
-    fingerprint,
-    language_id,
-    quality_score,
-    text_stats,
-    token_count,
-)
+"""Operator library: one submodule per operator family.
 
-__all__ = [
-    "asof_join",
-    "interval_join",
-    "connected_components",
-    "dedup_clusters",
-    "exact_dedup",
-    "minhash_lsh_pairs",
-    "ngram_jaccard_pairs",
-    "simhash",
-    "sketch_documents",
-    "cosine_topk",
-    "ivf_topk",
-    "kmeans_centroids",
-    "lsh_ann_pairs",
-    "lsh_buckets",
-    "text_stats",
-    "quality_score",
-    "language_id",
-    "token_count",
-    "fingerprint",
-    "attach_binary_payload",
-    "chunk_documents",
-    "decode_image",
-    "decode_wav",
-    "extract_audio_meta",
-    "extract_byte_features",
-    "extract_image_meta",
-    "iter_video_frames",
-    "sample_video_frames",
-    "chunk_dedup_ratio",
-    "content_defined_chunks",
-    "semantic_dedup",
-    "bpe_encode_word",
-    "bpe_token_count",
-]
+Callers import the submodule they need (``from
+utc_cuip_kafka_aws_connector_spark.operators.dedup import exact_dedup``).
+The package itself re-exports nothing, so importing one operator does
+not load the others or pandas.
+"""

@@ -242,7 +242,7 @@ def ann_append(
     monitoring says the space moved) and append to ``codes/`` (cell
     partitions) and ``vectors/``. Returns the number of rows
     appended. Append-only, like every incremental store in this repo
-    (increddup's LSH index, cardinality's sketch rows): searches see
+    (increddup's LSH index): searches see
     new rows immediately, nothing existing is rewritten."""
     text = _fs_read_text(spark, posixpath.join(path, INDEX_FILE))
     if text is None:

@@ -21,9 +21,8 @@ loss logs to one row per (step?, domain)); the EG loop then folds
 over the collected mixture-sized table — domains x steps rows, the
 same driver-sized contract (and the same refuse-loudly ``max_*``
 cap) as unimax_allocation / retention_curve. No iteration ever
-re-scans the corpus (labelmodel.py's documented trade is avoided by
-construction: DoReMi's per-step statistics are additive, so the
-reduction happens once).
+re-scans the corpus: DoReMi's per-step statistics are additive, so
+the reduction happens once.
 
 Determinism: domains fold in lexicographic order at every step, so
 float accumulation is reproducible; ties in excess loss need no
@@ -112,7 +111,7 @@ def doremi_weights(
 
     The fold runs on the collected (step?, domain) table —
     mixture-sized by design; ``max_cells`` refuses loudly (the
-    unimax/retention/kll contract) before the driver collect."""
+    unimax/retention contract) before the driver collect."""
     if lr <= 0:
         raise ValueError(f"lr must be > 0, got {lr}")
     if not (0.0 <= smoothing < 1.0):

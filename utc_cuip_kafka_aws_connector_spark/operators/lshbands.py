@@ -1,8 +1,8 @@
 """Shared MinHash-LSH banding: signature -> band keys.
 
-The one construction both near-dup surfaces consume — the streaming
-matcher (streaming/neardup.py) and the incremental batch dedup
-(operators/increddup.py): ``sketch_documents``'s MinHash signature
+The construction the incremental near-dup index consumes
+(operators/increddup.py, which stream-curate also runs per
+micro-batch): ``sketch_documents``'s MinHash signature
 is cut into ``bands`` slices of ``num_hashes/bands`` components, and
 each slice hashes (salted with its band index) to one bucket key.
 Two documents share a band key for some band with probability

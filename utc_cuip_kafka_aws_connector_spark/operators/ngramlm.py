@@ -239,8 +239,8 @@ def kn_train(
 
     if min_count > 1:
         # the generated id exists ONLY on this branch: it must never
-        # enter the min_count=1 lineage, whose tables join against
-        # STREAMING frames (streaming/pplmon.py) and Spark rejects
+        # enter the min_count=1 lineage, whose tables may join against
+        # STREAMING frames, and Spark rejects
         # monotonically_increasing_id anywhere in a streaming plan
         base = df.select(
             F.monotonically_increasing_id().alias("__id"), text_col

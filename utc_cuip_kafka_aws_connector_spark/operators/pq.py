@@ -1,7 +1,7 @@
 """Product quantization (PQ) with asymmetric-distance search — the
 deep-compression tier of the similarity stack.
 
-Where SQ8 (operators/quantize.py) stores 1 byte PER DIMENSION, PQ
+Where int8 scalar quantization stores 1 byte PER DIMENSION, PQ
 (Jégou/Douze/Schmid 2011, "Product Quantization for Nearest
 Neighbor Search" — the FAISS `PQ`/`IVFPQ` core) stores 1 code PER
 SUBSPACE: d dims split into m subvectors, each vector-quantized

@@ -5,7 +5,7 @@ registers), and a single global threshold over raw scores silently
 becomes a per-source keep-rate lottery. Standard practice normalizes
 WITHIN each source first; this module is that step, feeding the
 threshold machinery that already exists (retention_curve picks the
-cut, calibration.pr_curve grades it, reservoir draws by it).
+cut, reservoir draws by it).
 
 Methods:
 

@@ -14,9 +14,8 @@ resolves, in order:
    manifest pruning, zero footer I/O, snapshot isolation and time
    travel for free (pass ``version=``).
 2. **plain directory with a persisted skip manifest**
-   (``_skip_manifest.json``, written by ``write_stats_manifest``,
-   ``write_clustered_manifested``, or ``ndcurve.write_ndclustered``
-   with ``stats_manifest=True``): prune from the manifest — the steady-state read
+   (``_skip_manifest.json``, written by ``write_stats_manifest`` or
+   ``write_clustered_manifested``): prune from the manifest — the steady-state read
    path, zero footer I/O. The manifest is only valid for the
    write-once/overwrite-whole-directory layouts those writers
    produce; the writers rewrite it atomically with the data, and a
@@ -227,12 +226,9 @@ def write_clustered_manifested(
     **options,
 ) -> None:
     """``layout.write_clustered`` + a skip manifest in one step — the
-    write-time half of the skipping contract for plain 2-D layouts
-    (``ndcurve.write_ndclustered(stats_manifest=True)`` is the N-d
-    counterpart, where the option lives directly on the writer; this
-    2-D wrapper exists here because layout.py is byte-frozen at r9 —
-    its q117 dependent is out-of-window — and folds into
-    write_clustered's own signature at r10)."""
+    write-time half of the skipping contract for plain 2-D layouts.
+    ``options`` go to the parquet writer (``maxRecordsPerFile`` sets
+    how many files each range partition splits into)."""
     from utc_cuip_kafka_aws_connector_spark.operators.layout import (
         write_clustered,
     )

@@ -54,7 +54,7 @@ def unimax_allocation(
     aggregation and treats ``df`` as the (group, size) table
     directly. The waterfill runs on the collected group table —
     mixture-sized by design (languages/sources) — so ``max_groups``
-    refuses loudly (the kll/retention_curve contract) when a
+    refuses loudly (the retention_curve contract) when a
     high-cardinality key would otherwise OOM the driver."""
     if budget <= 0:
         raise ValueError(f"budget must be > 0, got {budget}")

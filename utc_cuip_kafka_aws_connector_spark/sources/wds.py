@@ -2,9 +2,8 @@
 large multimodal corpora (image/audio/video + sidecar text/JSON
 packed as ``<key>.<ext>`` entries in ~100 MB-1 GB tar files).
 
-Why this exists: the multimodal operator stack
-(operators/multimodal.py, imagedup.py, audiodup.py) consumes opaque
-binary columns; real corpora arrive as tar shards (the public
+Why this exists: the multimodal operators
+(operators/multimodal.py) consume opaque binary columns; real corpora arrive as tar shards (the public
 WebDataset convention: all entries sharing a basename form one
 sample). This module is the bridge — tar shards <-> the repo's
 (key, ext, content) binary-column shape — so a user can point the
